@@ -82,8 +82,10 @@ def probe_schema(spark: SparkSession, path: str) -> StructType | None:
     """Footer-only schema probe; None when unreadable
     (reference: src/main.rs:433-437 returns Option).
 
-    ``spark.read.parquet(path).schema`` reads only parquet footers on the
-    driver — no data pages, no executor job.
+    ``spark.read.parquet(path).schema`` reads only parquet footers, no
+    data pages, but on Spark 4.1 the footer inference still runs as one
+    Spark job.  :func:`probe_schemas` avoids it where it can by reading
+    footers with pyarrow.
     """
     try:
         return spark.read.parquet(path).schema

@@ -450,3 +450,82 @@ def test_ordered_merge_uri_directory_input(spark, tmp_path):
     plain = rows([d0])
     via_uri = rows(["file:" + d0])
     assert plain == via_uri and sorted(plain) == [1, 2, 3, 4]
+
+
+def _order_map_inputs(tmp_path):
+    """Two small files under a directory whose name Hadoop URL-encodes
+    (space, '%', '#') and holds non-ASCII, with schema drift (the second
+    file has an extra column), plus the expected reference-order result."""
+    import pandas as pd
+
+    d = tmp_path / "dätä, ü #%"
+    d.mkdir()
+    a = pd.DataFrame({"k": [5, 3, 9], "s": ['x,1', 'y"2', "ü3"]})
+    b = pd.DataFrame({"k": [2, 8], "s": ["p", "q"], "extra": [1.5, 2.5]})
+    paths = [str(d / "a.parquet"), str(d / "b.parquet")]
+    a.to_parquet(paths[0], index=False)
+    b.to_parquet(paths[1], index=False)
+    return paths, pd.concat([a, b[["k", "s"]]], ignore_index=True)
+
+
+def test_ordered_merge_file_map_is_local_relation(spark, tmp_path):
+    """The file-sequence map is a JVM LocalRelation, not a Python-list
+    LogicalRDD whose broadcast would start Python workers per batch."""
+    from parquet_merger_spark.operators.merge import merged_df_ordered
+
+    paths, _ = _order_map_inputs(tmp_path)
+    df, _ = merged_df_ordered(spark, paths)
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in plan
+    assert "LogicalRDD" not in plan
+
+
+def test_single_file_merge_order_without_arrow(spark, tmp_path):
+    """Same rows, same order with Arrow conversion disabled: the map
+    must not depend on spark.sql.execution.arrow.pyspark.enabled."""
+    import pandas as pd
+
+    paths, expected = _order_map_inputs(tmp_path)
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        res = merge_batches(
+            spark, [MergePlan(name="noarrow", paths=paths)], str(tmp_path / "out"),
+            single_file=True,
+        )
+    finally:
+        spark.conf.set(key, prev)
+    assert res[0].ok and res[0].rows == 5
+    got = pd.read_parquet(res[0].output_path)
+    pd.testing.assert_frame_equal(got, expected)
+
+
+@pytest.mark.parametrize("single_file", [True, False])
+def test_merge_batches_csv_equals_merged_parquet(spark, tmp_path, single_file):
+    """The CSV leg re-reads the merged parquet with its known schema; the
+    CSV must carry the parquet's header and rows (in order, single-file)."""
+    import glob as _glob
+
+    import pandas as pd
+
+    paths, expected = _order_map_inputs(tmp_path)
+    out_dir = str(tmp_path / "out")
+    res = merge_batches(
+        spark, [MergePlan(name="csvleg", paths=paths)], out_dir,
+        single_file=single_file, csv=True,
+    )
+    assert res[0].ok and res[0].rows == 5
+    csv_out = os.path.join(out_dir, "merged", "csvleg.csv")
+    if single_file:
+        pq_rows = pd.read_parquet(res[0].output_path)
+        csv_rows = pd.read_csv(csv_out)
+        pd.testing.assert_frame_equal(pq_rows, expected)
+    else:
+        parts = sorted(_glob.glob(os.path.join(csv_out, "part-*.csv")))
+        csv_rows = pd.concat(map(pd.read_csv, parts), ignore_index=True)
+        pq_rows = pd.read_parquet(res[0].output_path)
+        csv_rows = csv_rows.sort_values("k", ignore_index=True)
+        pq_rows = pq_rows.sort_values("k", ignore_index=True)
+    assert list(csv_rows.columns) == list(pq_rows.columns) == ["k", "s"]
+    pd.testing.assert_frame_equal(csv_rows, pq_rows, check_dtype=False)
