@@ -35,28 +35,6 @@ def tokens_col(text: Column | str, sep: str = " ") -> Column:
     return F.split(text, sep)
 
 
-def word_ngrams(tokens: Column, n: int) -> Column:
-    """Word n-grams as strings; empty array when the doc has fewer than
-    n tokens.
-
-    Built as iterated ``zip_with`` over SLICED arrays, never
-    ``transform(sequence) + element_at``: when ``tokens`` is an
-    unmaterialized expression (the common ``F.split(text)`` call site),
-    per-index ``element_at`` re-evaluates that expression on every
-    access — measured 13x slower at sf1 on the bigram-familiarity
-    gram build.  The slice/zip_with form evaluates ``tokens`` once per
-    slice regardless of what the caller passes."""
-    num = F.greatest(F.size(tokens) - (n - 1), F.lit(0))
-    acc = F.slice(tokens, 1, num)
-    for j in range(1, n):
-        acc = F.zip_with(
-            acc,
-            F.slice(tokens, j + 1, num),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-    return acc
-
-
 def exact_dedup(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
     """Keep exactly one row per key (the minimum ``order_col`` row) —
     deterministic, unlike ``dropDuplicates`` whose survivor depends on
@@ -305,7 +283,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     shingle_words: int = 2,
     threshold: float = 0.5,
-    storage_level=None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + LSH banding, Jaccard-verified.
 
@@ -323,13 +300,11 @@ def minhash_lsh_pairs(
     sf0.1 documents table); steeper r at fixed t* cuts candidates, and
     recall above t* stays ~1 (bounded in tests/test_recall.py).
 
-    ``storage_level`` controls how the signature table is persisted
-    across its two consumers (bucket generation + Jaccard verification;
-    default MEMORY_AND_DISK — pass ``StorageLevel.DISK_ONLY`` at cluster
-    scale).  The persisted table lives until the session ends or the
-    caller runs ``spark.catalog.clearCache()`` — in a long-lived
-    service, clear it after materializing the result (same persist
-    hygiene contract as :func:`ngram_jaccard_pairs`).
+    The signature table is persisted MEMORY_AND_DISK across its two
+    consumers (bucket generation + Jaccard verification).  It lives until
+    the session ends or the caller runs ``spark.catalog.clearCache()`` —
+    in a long-lived service, clear it after materializing the result
+    (same persist hygiene contract as :func:`ngram_jaccard_pairs`).
     """
     from pyspark import StorageLevel
 
@@ -346,7 +321,7 @@ def minhash_lsh_pairs(
     eligible = df.filter(F.size(tokens_col(text_col)) >= shingle_words)
     sigs = minhash_signatures(
         eligible, id_col, text_col, num_hashes, shingle_words
-    ).persist(storage_level or StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
     buckets = lsh_band_buckets(sigs, id_col, num_hashes, bands)
 
@@ -395,7 +370,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     shingle_words: int = 2,
     threshold: float = 0.5,
-    storage_level: "StorageLevel | None" = None,
     candidate_pairs: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT n-gram Jaccard similarity join with prefix + positional
@@ -431,10 +405,8 @@ def ngram_jaccard_pairs(
     the whole prefix/PPJoin candidate machinery is skipped — cost becomes
     one shingle-set build plus two equi-joins on the candidate ids,
     O(candidates), with the LSH recall bound (>0.99 at J>=0.8 for b=6,
-    r=2) as the only approximation.  ``storage_level``
-    controls how the shingle table is persisted across its four consumers
-    (default MEMORY_AND_DISK; pass ``StorageLevel.DISK_ONLY`` at cluster
-    scale, or checkpoint to a table).  The persisted table lives until the
+    r=2) as the only approximation.  The shingle table is persisted
+    MEMORY_AND_DISK across its four consumers.  It lives until the
     session ends or the caller runs ``spark.catalog.clearCache()`` — in a
     long-lived service, clear it after materializing the result.
     """
@@ -471,7 +443,7 @@ def ngram_jaccard_pairs(
             "sh_hashes",
             F.size("sh_hashes").alias("n"),
         )
-        .persist(storage_level or StorageLevel.MEMORY_AND_DISK)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
     if candidate_pairs is not None:
@@ -512,7 +484,7 @@ def ngram_jaccard_pairs(
         prefix = (
             ranked.filter(F.col("rn") <= prefix_len)
             .select(id_col, "n", "gram", "rn")
-            .persist(storage_level or StorageLevel.MEMORY_AND_DISK)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         prefix.count()
 
@@ -701,7 +673,6 @@ def write_gram_index(
     text_col: str = "text",
     shingle_words: int = 3,
     max_train_df: int | None = 10_000,
-    num_partitions: int | None = None,
 ) -> None:
     """Persist the decontamination train-gram inverted index: df-capped
     ``(g, train_id)`` rows at ``<path>/grams``, build parameters at
@@ -711,9 +682,7 @@ def write_gram_index(
     and high-variance (observed 1.7s<->8.2s at sf0.1).
 
     The index is hash-repartitioned on ``g`` at write time so each probe
-    join starts from a gram-clustered layout; at 100 TB make
-    ``num_partitions`` proportional to corpus size (or bucket the table)
-    so a probe shuffles only the tiny eval side."""
+    join starts from a gram-clustered layout."""
     sess = train.sparkSession
     tr = _distinct_shingle_hashes(train, id_col, text_col, shingle_words).select(
         F.col(id_col).alias("train_id"),
@@ -726,9 +695,7 @@ def write_gram_index(
     # clustering the docstring promises still needs an explicit shuffle.
     if max_train_df is not None:
         tr = _df_capped(tr, max_train_df)
-    if num_partitions:
-        tr = tr.repartition(num_partitions, "g")
-    elif max_train_df is None:
+    if max_train_df is None:
         tr = tr.repartition("g")
     tr.write.mode("overwrite").parquet(f"{path}/grams")
     sess.createDataFrame(
@@ -751,7 +718,6 @@ def dup_clusters(
     id_b: str = "id_b",
     max_iters: int = 50,
     steps_per_round: int = 2,
-    checks_every: int = 1,
 ) -> DataFrame:
     """Resolve near-duplicate PAIRS into CLUSTERS: connected components by
     iterative min-label propagation.  Returns (doc_id, cluster_id) for
@@ -786,13 +752,9 @@ def dup_clusters(
     before the loop).  Intermediate steps are referenced exactly once by
     their successor, so composing steps no longer re-executes
     intermediates (the old 2^(k-1) caveat is gone).  Convergence is
-    checked on round-GROUP boundaries: ``checks_every`` composes that
-    many full (steps + shortcut) rounds per convergence check (r11 —
-    fewer barriers/collect jobs where the loop is job-count-bound, up
-    to ``checks_every - 1`` wasted composed rounds where E-shuffles
-    dominate; see the loop comment), and ``max_iters`` bounds CHECKS
-    (``max_iters * checks_every * steps_per_round`` propagation steps,
-    each round further accelerated by the shortcut).
+    checked after every round, and ``max_iters`` bounds rounds
+    (``max_iters * steps_per_round`` propagation steps, each round
+    further accelerated by the shortcut).
     Deterministic: pure min over a fixed edge set — any step grouping,
     with or without shortcutting, reaches the same unique fixpoint
     (labels decrease monotonically to the component minimum).
@@ -896,21 +858,14 @@ def dup_clusters(
     converged = False
     for _ in range(max_iters):
         cur = labels
-        # ``checks_every`` > 1 composes that many full (steps + shortcut)
-        # rounds into ONE lazy plan per convergence check (r10 verdict
-        # #5's "propagate k, check every other round" schedule): each
-        # skipped check saves a materialization barrier + a collect job —
-        # the binding cost at small scale where the loop is job-count-
-        # bound — at the risk of up to (checks_every - 1) composed rounds
-        # of wasted E-volume aggregates when convergence lands mid-group
-        # (the binding cost at cluster scale).  Same unique fixpoint
-        # either way (monotone min); ``max_iters`` bounds CHECKS, so the
-        # propagation-step budget is max_iters * checks_every *
-        # steps_per_round.
-        for _g in range(max(1, checks_every)):
-            for _ in range(max(1, steps_per_round)):
-                cur = _step(cur)
-            cur = _shortcut(cur)
+        for _ in range(max(1, steps_per_round)):
+            cur = _step(cur)
+        cur = _shortcut(cur)
+        # Convergence is checked after EVERY round.  Composing two rounds
+        # per check halves the barriers, but the shortcut references its
+        # round's output twice, which is only free on a materialized
+        # checkpoint: measured worse in r11 (semdedup min-of-5 at sf0.1,
+        # 5.08 s -> 8.30 s with two rounds per check).
         prev = labels.select(
             F.col("node").alias("__pnode"), F.col("label").alias("__plabel")
         )
@@ -1092,17 +1047,6 @@ def semdedup(
     # per barrier cuts rounds 7 -> 4 on the sf0.1 graph (6.1s vs 7.1s
     # wall) and is free since r10's single-reference steps; at worst
     # k-1 steps run past convergence, cheap next to 3 extra barriers.
-    # checks_every stays 1 (r11, MEASURED REJECTION): composing two full
-    # rounds per convergence check halves the barriers/collects (the r10
-    # verdict-#5 schedule), but each round's pointer-jumping shortcut
-    # references its own round's output twice, and that double reference
-    # is only free when it lands on a MATERIALIZED checkpoint — composed
-    # past the barrier it re-executes the inner round's aggregates, and
-    # the deeper AQE plan re-plans every exchange: min-of-5 at sf0.1
-    # went 5.08s -> 8.30s with checks_every=2.  The knob stays available
-    # on dup_clusters for graphs where barrier latency (not E-volume)
-    # dominates — the opposite trade at cluster scale is unproven, so
-    # the default follows the measurement we have.
     clusters = dup_clusters(
         pairs, max_iters=max_iters, steps_per_round=4
     ).withColumnRenamed("doc_id", "__cid")
@@ -1179,7 +1123,6 @@ def simhash_near_dup_pairs(
     max_hamming: int = 3,
     bands: int = 4,
     bits: int = 64,
-    storage_level=None,
 ) -> DataFrame:
     """Near-dup pairs with Hamming distance <= max_hamming on ``bits``-bit
     SimHash.
@@ -1194,9 +1137,8 @@ def simhash_near_dup_pairs(
     recall-lossy.  At billions of docs, raise ``bands`` (narrower chunks ->
     more, smaller buckets) rather than accepting huge per-bucket self-joins.
 
-    ``storage_level``: persist level for the signature table (two
-    consumers — chunk explode + verification join; default
-    MEMORY_AND_DISK, ``DISK_ONLY`` for the cluster tier).  Lives until
+    The signature table is persisted MEMORY_AND_DISK for its two
+    consumers (chunk explode + verification join).  It lives until
     ``spark.catalog.clearCache()`` — same hygiene contract as
     :func:`ngram_jaccard_pairs`.
     """
@@ -1216,7 +1158,7 @@ def simhash_near_dup_pairs(
     # The fan-out lives here, not in simhash_signatures, so the
     # signature operator itself stays zero-Exchange as plan-pinned.
     sigs = simhash_signatures(fan_out(df), id_col, text_col, bits=bits).persist(
-        storage_level or StorageLevel.MEMORY_AND_DISK
+        StorageLevel.MEMORY_AND_DISK
     )
     chunk_bits = bits // bands
     mask = (1 << chunk_bits) - 1
@@ -1351,7 +1293,6 @@ def containment_pairs(
     text_col: str = "text",
     shingle_words: int = 3,
     threshold: float = 0.6,
-    storage_level: "StorageLevel | None" = None,
 ) -> DataFrame:
     """DIRECTIONAL containment near-dup pairs: C(A -> B) =
     |grams(A) & grams(B)| / |grams(A)| >= threshold.  Jaccard misses
@@ -1373,9 +1314,8 @@ def containment_pairs(
     TIERING AT SCALE: verification tier, same contract as
     :func:`ngram_jaccard_pairs` — at 100 TB run it on LSH candidates or
     audit samples; the headline candidate generator stays MinHash-LSH.
-    ``storage_level`` controls the persisted shingle table exactly as in
-    that operator (default MEMORY_AND_DISK; DISK_ONLY at cluster scale;
-    lives until the session ends or ``spark.catalog.clearCache()``).
+    The shingle table is persisted MEMORY_AND_DISK as in that operator
+    (lives until the session ends or ``spark.catalog.clearCache()``).
     """
     from pyspark import StorageLevel
 
@@ -1387,7 +1327,7 @@ def containment_pairs(
             shingle_words,
         )
         .select(F.col(id_col), "sh_hashes", F.size("sh_hashes").alias("n"))
-        .persist(storage_level or StorageLevel.MEMORY_AND_DISK)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     inv = sh.select(F.col(id_col), "n", F.explode("sh_hashes").alias("gram"))
 

@@ -37,6 +37,11 @@ from parquet_merger_spark.barrier import materialize, materialize_lazy
 
 SCALE = 1_000_000
 
+# triangle_count's adjacency and degree joins broadcast while the
+# oriented edge set has at most this many rows; above it (the sharded
+# 100 TB regime) they become shuffle equi-joins on the vertex key
+BROADCAST_EDGE_LIMIT = 5_000_000
+
 
 def pagerank_int(
     edges: DataFrame,
@@ -45,7 +50,6 @@ def pagerank_int(
     src_col: str = "src",
     dst_col: str = "dst",
     assume_distinct: bool = False,
-    broadcast_ranks: bool = True,
     assume_symmetric: bool = False,
 ) -> DataFrame:
     """Integer-exact PageRank over a directed edge list; returns
@@ -61,15 +65,12 @@ def pagerank_int(
     directions): the vertex set then falls out of the degree table for
     free instead of a distinct over 2|E| rows.
 
-    ``broadcast_ranks`` (default) ships the O(V) rank/contribution
-    frames to every executor each pass, so the cached O(E) side NEVER
-    re-shuffles — per iteration: one map-side join over cached E, one
-    contribution aggregate (the only E-volume shuffle), one broadcast
-    join back onto the vertex set.  The degree table is O(V) and rides
-    the same broadcast fast path.  Set it False when V itself is too
-    big to broadcast (billions of vertices at 100 TB): the loop then
-    relies on co-partitioned shuffle joins — pre-bucket E and the rank
-    table on the vertex key so those joins stay exchange-free.
+    The O(V) rank/contribution frames are broadcast to every executor
+    each pass, so the cached O(E) side NEVER re-shuffles — per
+    iteration: one map-side join over cached E, one contribution
+    aggregate (the only E-volume shuffle), one broadcast join back onto
+    the vertex set.  The degree table is O(V) and rides the same
+    broadcast fast path.
 
     The loop invariants (degree-annotated edges, vertex set) are
     persisted AND EAGERLY materialized (one count() each) before the
@@ -99,12 +100,9 @@ def pagerank_int(
     # shuffles E down to O(V) partials map-side, and the join is
     # map-side against the broadcast degree table — cheaper than the
     # earlier count-window (hash shuffle + SORT of all of E by src;
-    # measured 5.3s -> 4.0s at sf0.1).  With broadcast_ranks=False the
-    # degree join falls back to a co-partitioned shuffle join, keyed on
-    # the same vertex key as the loop joins.
-    maybe_b = F.broadcast if broadcast_ranks else (lambda df: df)
+    # measured 5.3s -> 4.0s at sf0.1).
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).persist()
-    e_deg = e.join(maybe_b(deg), "src").persist()
+    e_deg = e.join(F.broadcast(deg), "src").persist()
     e_deg.count()
     if assume_symmetric:
         vertices = deg.select(F.col("src").alias("vertex")).persist()
@@ -123,7 +121,7 @@ def pagerank_int(
     ranks = None
     for it in range(iterations):
         # one E-volume shuffle per iteration (the contribution aggregate
-        # on dst); the rank sides are O(V) and broadcast by default (see
+        # on dst); the rank sides are O(V) and broadcast (see
         # docstring), so cached E stays put
         if ranks is None:
             # first pass: every rank is the constant SCALE, so the rank
@@ -135,14 +133,14 @@ def pagerank_int(
             )
         else:
             scored = e_deg.join(
-                maybe_b(ranks), e_deg.src == ranks.vertex
+                F.broadcast(ranks), e_deg.src == ranks.vertex
             ).select(
                 F.col("dst").alias("vertex"),
                 F.expr("rank_micro div outdeg").alias("c"),
             )
         contrib = scored.groupBy("vertex").agg(F.sum("c").alias("s"))
         ranks = (
-            vertices.join(maybe_b(contrib), "vertex", "left")
+            vertices.join(F.broadcast(contrib), "vertex", "left")
             .select(
                 "vertex",
                 (
@@ -184,7 +182,6 @@ def triangle_count(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    broadcast_edge_limit: int = 5_000_000,
     shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Exact global triangle count over an undirected edge list, by
@@ -216,8 +213,8 @@ def triangle_count(
     Ties in degree break by node id, so the orientation — and every
     intermediate — is fully deterministic.
 
-    ``broadcast_edge_limit``: when the ORIENTED edge set fits under this
-    row count, the adjacency-array joins run as broadcast hash joins and
+    When the ORIENTED edge set fits under ``BROADCAST_EDGE_LIMIT``
+    rows, the adjacency-array joins run as broadcast hash joins and
     the whole count stays in one stage.  Above the limit — the true
     100 TB regime, where E itself is sharded — they fall back to shuffle
     equi-joins on the vertex key; orientation bounds every out-neighbor
@@ -241,18 +238,6 @@ def triangle_count(
     version set/restored ``spark.sql.shuffle.partitions``, which leaked
     to concurrent threads for the duration of the call).
     """
-    return _triangle_count_body(
-        edges, src_col, dst_col, broadcast_edge_limit, shuffle_partitions
-    )
-
-
-def _triangle_count_body(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    broadcast_edge_limit: int,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
     def _shard(df: DataFrame, *cols: str) -> DataFrame:
         # the hint: pin THIS operator's shuffle width by hash-partitioning
         # on the exact keys the next aggregation/join requires — Spark's
@@ -313,12 +298,12 @@ def _triangle_count_body(
     # the adjacency joins (V <= 2E): an unconditional broadcast hint
     # bypasses autoBroadcastJoinThreshold/AQE, and above the limit the
     # degree table is as unbroadcastable as the edges themselves
-    maybe_deg_b = (
-        F.broadcast if n_edges <= broadcast_edge_limit else (lambda df: df)
+    maybe_b = (
+        F.broadcast if n_edges <= BROADCAST_EDGE_LIMIT else (lambda df: df)
     )
     oriented = (
-        e.join(maybe_deg_b(da), "a")
-        .join(maybe_deg_b(db), "b")
+        e.join(maybe_b(da), "a")
+        .join(maybe_b(db), "b")
         .select(
             F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("s"),
             F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("t"),
@@ -340,15 +325,12 @@ def _triangle_count_body(
     # pipeline at |E| rows with O(deg) row-local work (~2s).
     # |oriented| == |e| exactly (orientation maps each undirected edge to
     # ONE directed edge — the join is key-preserving and lower_first is
-    # total), so the broadcast-vs-shuffle decision for the adjacency
-    # joins reuses n_edges and the r09 oriented.count() barrier job is
-    # gone (guide §1.2: don't pay for a number you already have); above
-    # the limit both joins become shuffle equi-joins on the vertex key —
-    # the sharded regime; orientation still bounds every array at
+    # total), so the adjacency joins reuse the degree joins' n_edges
+    # broadcast-vs-shuffle choice and the r09 oriented.count() barrier
+    # job is gone (guide §1.2: don't pay for a number you already have);
+    # above the limit both joins become shuffle equi-joins on the vertex
+    # key — the sharded regime; orientation still bounds every array at
     # O(sqrt E)
-    maybe_b = (
-        F.broadcast if n_edges <= broadcast_edge_limit else (lambda df: df)
-    )
     # persisted + eagerly materialized: THREE consumers (the wedge-count
     # aggregate and the differently-aliased ns/nt broadcast projections)
     # would otherwise each rerun the O(E) collect_list shuffle — aliased

@@ -536,14 +536,34 @@ def merge_batches(
     merged_dir = os.path.join(output_dir, "merged")
     os.makedirs(merged_dir, exist_ok=True)
 
+    # Sanitizing can map two plan names onto one output ("my file" and
+    # "my_file").  Every output path is claimed here, in plan order and
+    # before any batch runs, so a later batch that would overwrite an
+    # earlier one's output fails instead, whatever the thread schedule.
+    targets: list[tuple[str, str]] = []  # (output, CSV output) per plan
+    claimed: dict[str, str] = {}
+    clashes: dict[int, str] = {}
+    for i, plan in enumerate(plans):
+        base = os.path.join(merged_dir, sanitize_filename(plan.name))
+        out = base + ".parquet" if single_file else base
+        targets.append((out, base + ".csv"))
+        paths = [out, base + ".csv"] if csv else [out]
+        taken = next((p for p in paths if p in claimed), None)
+        if taken is not None:
+            clashes[i] = (
+                f"output {taken} is already written by batch {claimed[taken]!r}; "
+                f"batch {plan.name!r} not written"
+            )
+        else:
+            claimed.update(dict.fromkeys(paths, plan.name))
+
     sc = spark.sparkContext
     total_batches = len(plans)
     done_lock = threading.Lock()
     done_count = [0]
 
-    def run_one(plan: MergePlan) -> BatchResult:
-        name = sanitize_filename(plan.name)
-        out = os.path.join(merged_dir, name + ".parquet") if single_file else os.path.join(merged_dir, name)
+    def run_one(i: int, plan: MergePlan) -> BatchResult:
+        out, csv_out = targets[i]
 
         gid = stop = poller = None
         if progress is not None:
@@ -573,6 +593,8 @@ def merge_batches(
             poller = threading.Thread(target=poll, daemon=True)
             poller.start()
         try:
+            if i in clashes:
+                raise ValueError(clashes[i])
             # single-file mode pins the reference's row order (files in
             # plan order, rows in file order); directory mode stays
             # unordered — a multi-file 100 TB output has no total order
@@ -604,7 +626,7 @@ def merge_batches(
                     csv_order = [ORDER_ROW_COL]
                 export_csv(
                     csv_src,
-                    os.path.join(merged_dir, name + ".csv"),
+                    csv_out,
                     single_file=single_file,
                     order_by=csv_order,
                 )
@@ -647,6 +669,6 @@ def merge_batches(
         return result
 
     if max_concurrency <= 1:
-        return [run_one(p) for p in plans]
+        return [run_one(i, p) for i, p in enumerate(plans)]
     with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
-        return list(pool.map(run_one, plans))
+        return list(pool.map(run_one, range(len(plans)), plans))

@@ -45,7 +45,6 @@ def cap_per_group(
     cap: int,
     id_col: str = "doc_id",
     gate: Column | None = None,
-    n_salts: int = 32,
 ) -> DataFrame:
     """Keep at most ``cap`` rows per group (per-domain / per-source caps —
     the standard defense against one crawl domain dominating a training
@@ -55,9 +54,9 @@ def cap_per_group(
 
     Executes via the skew-safe two-phase top-k
     (:func:`~parquet_merger_spark.operators.ranking.topk_per_group_salted`):
-    a viral domain with 1e9 rows is ranked in ``n_salts`` parallel slices
-    of local-top-``cap`` before the global re-rank touches only
-    ``n_salts * cap`` survivors per group — no single task ever sorts a
+    a viral domain with 1e9 rows is ranked in 32 parallel slices of
+    local-top-``cap`` before the global re-rank touches only
+    ``32 * cap`` survivors per group — no single task ever sorts a
     whole hot domain.  Appends ``rank`` (1..cap within the group).
     """
     from parquet_merger_spark.operators.ranking import topk_per_group_salted
@@ -69,7 +68,7 @@ def cap_per_group(
         [g.asc(), F.col(id_col).asc()],
         cap,
         salt_col=F.xxhash64(F.col(id_col), F.lit(1)),
-        n_salts=n_salts,
+        n_salts=32,
     )
 
 

@@ -43,7 +43,7 @@ _FAN_OUT_BLOCKERS = (
 )
 
 
-def fan_out(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Spread ``df`` across at least the session's default parallelism
     before a CPU-heavy row-local stage; no-op unless the frame is a
     narrow pipeline over a scan with fewer files than that (the
@@ -75,7 +75,7 @@ def fan_out(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
         # micro-batch parallelism is the stream's own partitioning
         # concern (and listing semantics differ on streaming plans)
         return df
-    target = min_parallelism or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         plan = df._jdf.queryExecution().analyzed().toString()
         if any(b in plan for b in _FAN_OUT_BLOCKERS):
@@ -91,7 +91,6 @@ def fan_out(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
 def scaled_partitions(
     source: DataFrame,
     bytes_per_partition: int = 4 << 20,
-    min_partitions: int | None = None,
 ) -> int:
     """Scale-adaptive partition count derived from ``source``'s
     optimizer size estimate: ``max(defaultParallelism,
@@ -111,9 +110,7 @@ def scaled_partitions(
     estimate-quality statistics only; pass the base table, not the
     derived frame.
     """
-    sess = source.sparkSession
-    dp = sess.sparkContext.defaultParallelism
-    floor = max(min_partitions or 0, dp)
+    floor = source.sparkSession.sparkContext.defaultParallelism
     try:
         est = int(source._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:

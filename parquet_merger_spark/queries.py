@@ -1499,43 +1499,6 @@ def q_hll_rollup(spark, sf_dir):
     )
 
 
-def q_trend_fit(spark, sf_dir):
-    """Per-group least-squares trend: slope+intercept of daily event
-    count over day index, per event type — the regression twin of
-    corr_matrix, same bit-stable recipe (exact integer sufficient
-    statistics reduced per group, closed-form doubles at the end).
-    Two aggregates (daily rollup, then per-type stats); both shuffles
-    are map-side partial."""
-    e = _events(spark, sf_dir)
-    day0 = F.lit(19723)  # 2024-01-01 as epoch-day; keeps x small+exact
-    daily = (
-        e.withColumn(
-            "x", (F.floor(F.col("ts").cast("long") / 86400) - day0).cast("long")
-        )
-        .groupBy("event_type", "x")
-        .agg(F.count(F.lit(1)).alias("y"))
-    )
-    st = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    n = F.col("n").cast("double")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    sxx = F.col("sxx").cast("double")
-    slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    return st.select(
-        "event_type",
-        "n",
-        F.round(slope, 6).alias("slope"),
-        F.round((sy - slope * sx) / n, 6).alias("intercept"),
-    )
-
-
 def q_scd2_asof_lookup(spark, sf_dir):
     """Point-in-time dimension lookup: facts stamped with a snapshot id
     join the SCD2 customer versions whose [valid_from, valid_to)

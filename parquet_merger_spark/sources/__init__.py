@@ -3,7 +3,6 @@ from parquet_merger_spark.sources.catalog import (
     file_catalog_df,
     probe_schema,
     probe_schemas,
-    read_parquet_batch,
     scan_folders,
 )
 
@@ -13,5 +12,4 @@ __all__ = [
     "probe_schema",
     "probe_schemas",
     "file_catalog_df",
-    "read_parquet_batch",
 ]

@@ -234,7 +234,6 @@ def _probe_schema_arrow(path: str) -> StructType:
 def probe_schemas(
     spark: SparkSession,
     paths: list[str],
-    max_workers: int | None = None,
     distributed_threshold: int = 8192,
 ) -> list[StructType | None]:
     """Probe many footers CONCURRENTLY; one result per path, in order
@@ -298,7 +297,7 @@ def probe_schemas(
 
     from concurrent.futures import ThreadPoolExecutor
 
-    workers = max_workers or min(16, len(paths), os.cpu_count() or 4)
+    workers = min(16, len(paths), os.cpu_count() or 4)
 
     if arrow_ok and len(paths) >= distributed_threshold:
         results: dict[str, StructType | None] = _probe_schemas_distributed(
@@ -378,10 +377,3 @@ def file_catalog_df(spark: SparkSession, folders: list[str]) -> DataFrame:
             "file_stem": stem_col("full_path"),
         }
     )
-
-
-def read_parquet_batch(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Vectorized multi-file parquet scan (reference read loop:
-    src/main.rs:582-599, one file at a time; Spark reads all files of a
-    batch as one distributed scan with a task per split)."""
-    return spark.read.parquet(*paths)

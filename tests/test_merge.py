@@ -529,3 +529,42 @@ def test_merge_batches_csv_equals_merged_parquet(spark, tmp_path, single_file):
         pq_rows = pq_rows.sort_values("k", ignore_index=True)
     assert list(csv_rows.columns) == list(pq_rows.columns) == ["k", "s"]
     pd.testing.assert_frame_equal(csv_rows, pq_rows, check_dtype=False)
+
+
+@pytest.mark.parametrize(
+    "single_file,csv,max_concurrency", [(True, False, 1), (True, True, 2), (False, True, 2)]
+)
+def test_merge_batches_sanitized_name_collision(
+    spark, tmp_path, single_file, csv, max_concurrency
+):
+    """Plans 'my file' and 'my_file' sanitize to one output name: the
+    later batch must fail, naming the earlier batch and the shared path,
+    and leave the earlier batch's output intact."""
+    import glob as _glob
+
+    import pandas as pd
+
+    from parquet_merger_spark.plans import smart_batch
+    from parquet_merger_spark.sources import scan_folders
+
+    for sub in ("a", "b"):
+        (tmp_path / sub).mkdir()
+        pd.DataFrame({"k": [1, 2]}).to_parquet(tmp_path / sub / "my file.parquet")
+        pd.DataFrame({"k": [3, 4, 5]}).to_parquet(tmp_path / sub / "my_file.parquet")
+    plans, _ = smart_batch(spark, scan_folders([str(tmp_path / "a"), str(tmp_path / "b")]))
+    assert sorted(p.name for p in plans) == ["my file", "my_file"]
+
+    out_dir = str(tmp_path / "out")
+    first, second = merge_batches(
+        spark, plans, out_dir, single_file=single_file, csv=csv,
+        max_concurrency=max_concurrency,
+    )
+    assert first.ok and first.rows == {"my file": 4, "my_file": 6}[first.name]
+    assert not second.ok and second.output_path is None
+    assert repr(first.name) in second.error
+    assert os.path.join(out_dir, "merged", "my_file") in second.error
+    assert spark.read.parquet(first.output_path).count() == first.rows
+    if csv:
+        csv_out = os.path.join(out_dir, "merged", "my_file.csv")
+        parts = [csv_out] if single_file else _glob.glob(os.path.join(csv_out, "part-*.csv"))
+        assert sum(len(pd.read_csv(p)) for p in parts) == first.rows
